@@ -1,108 +1,94 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's `taxor profile` stage re-expressed in Spark: a cascade of
   * ambiguity filters over a (query × matched group) table, an EM
   * reassignment loop, and hierarchical abundance rollups
   * (/root/reference/src/main/taxor_profile.cpp:796-858).
   *
-  * Input schema everywhere: (query_id, ref, match_cnt, query_n).
+  * Input schema everywhere: (query_id, ref, match_cnt, query_n). An empty
+  * input gives an empty output of the documented schema.
   */
 object ProfilePipeline {
+  private val byQuery = Window.partitionBy("query_id")
+  private val byRef = Window.partitionBy("ref")
+
   /** F5 — unique-mapping filter (taxor_profile.cpp:166-229): keep an
     * ambiguous match only if its ref also has at least one uniquely-mapped
-    * query. Left-semi join against the unique-ref set; no data blowup. */
-  def uniqueMappingFilter(matches: DataFrame): DataFrame = {
-    val w = Window.partitionBy("query_id")
-    val withN = matches.withColumn("__n", count(lit(1)).over(w))
-    val refsWithUnique =
-      withN.where(col("__n") === 1).select("ref").distinct()
-    withN.where(col("__n") === 1)
-      .unionByName(
-        withN.where(col("__n") > 1).join(refsWithUnique, Seq("ref"), "left_semi"))
-      .drop("__n")
-  }
+    * query. A lazy chain, no join: the row count per query_id, then per ref
+    * a "has a unique row" flag over a window. Keeps the input's columns. */
+  def uniqueMappingFilter(matches: DataFrame): DataFrame =
+    matches.withColumn("__n", count(lit(1)).over(byQuery))
+      .withColumn("__u", max(col("__n") === 1).over(byRef))
+      .where(col("__u")).drop("__n", "__u")
 
   /** F6 — low-confidence reference filter (taxor_profile.cpp:232-279):
     * keep a ref iff uniqueQueries >= minUnique and
-    * unique/(unique+ambiguous) >= minRatio; then re-run F5. */
+    * unique/(unique+ambiguous) >= minRatio (window counts per ref, as in
+    * F5); then re-run F5. */
   def lowConfidenceFilter(
       matches: DataFrame,
       minUnique: Long = 3,
-      minRatio: Double = 0.01): DataFrame = {
-    val w = Window.partitionBy("query_id")
-    val withN = matches.withColumn("__n", count(lit(1)).over(w))
-    val stats = withN.groupBy("ref").agg(
-      sum(when(col("__n") === 1, 1L).otherwise(0L)).as("u"),
-      sum(when(col("__n") > 1, 1L).otherwise(0L)).as("a"))
-    val good = stats.where(col("u") >= minUnique &&
-      col("u") / (col("u") + col("a")) >= minRatio)
-    uniqueMappingFilter(
-      matches.join(good.select("ref"), Seq("ref"), "left_semi"))
-  }
+      minRatio: Double = 0.01): DataFrame =
+    uniqueMappingFilter(matches
+      .withColumn("__n", count(lit(1)).over(byQuery))
+      .withColumn("__u", sum((col("__n") === 1).cast("long")).over(byRef))
+      .withColumn("__t", count(lit(1)).over(byRef))
+      .where(col("__u") >= minUnique && col("__u") / col("__t") >= minRatio)
+      .drop("__n", "__u", "__t"))
 
   /** F7 — MegaPath-style association filter
     * (taxor_profile.cpp:286-465): ref A is "explained by" B when >= shareCo
     * of A's queries co-map to B and B dominates A (more unique queries, or
-    * more total queries). The dominance predicate is evaluated INSIDE the
-    * pairs aggregation against broadcast per-ref stats (both sides O(refs)),
-    * so only the explained EDGES reach the driver — the co-occurrence
-    * matrix (O(refs²) at worst) never does. Chains are then chased to a
-    * fixpoint on the tiny explained map (the reference does the same
-    * in-memory, cpp:385-399) and A's matches are remapped to B via a
-    * broadcast map, dropping rows whose query already maps to B. */
+    * more total queries). The matches are grouped by query_id once: one job
+    * gets the per-ref (unique, total) counts, and a distributed
+    * `reduceByKey` counts the co-mapped ref pairs and applies the dominance
+    * test against the broadcast counts, so only the explained EDGES reach
+    * the driver — the co-occurrence matrix (O(refs²)) never does. When
+    * several refs explain A, A's container is the one with the highest
+    * co-mapped count, ties going to the ref first in String order. Chains
+    * are chased to a fixpoint on the explained map (as the reference does
+    * in-memory, cpp:385-399), and the remap is applied inside each query's
+    * candidate list: A's match becomes B's unless the query already maps to
+    * B, and matches landing on one ref merge by max. Returns the input
+    * itself when nothing is explained. Throws IllegalArgumentException on a
+    * null query_id, ref, match_cnt or query_n. */
   def associationFilter(matches: DataFrame, shareCo: Double = 0.95): DataFrame = {
-    val spark = matches.sparkSession
-    val w = Window.partitionBy("query_id")
-    val withN = matches.withColumn("__n", count(lit(1)).over(w)).cache()
-    val stats = withN.groupBy("ref").agg(
-      sum(when(col("__n") === 1, 1L).otherwise(0L)).as("u"),
-      count(lit(1)).as("total"))
-    val pairs = withN.as("a").join(withN.as("b"),
-        col("a.query_id") === col("b.query_id") && col("a.ref") =!= col("b.ref"))
-      .groupBy(col("a.ref").as("ra"), col("b.ref").as("rb"))
-      .agg(count(lit(1)).as("co"))
-    // distributed dominance test; co/ta kept as the same double division the
-    // scalar form used, so the shareCo cut is bit-identical to the old path
-    val explained = pairs
-      .join(broadcast(stats.select(col("ref").as("ra"),
-        col("u").as("__ua"), col("total").as("__ta"))), "ra")
-      .join(broadcast(stats.select(col("ref").as("rb"),
-        col("u").as("__ub"), col("total").as("__tb"))), "rb")
-      .where(col("co") / col("__ta") >= shareCo &&
-        (col("__ub") > col("__ua") ||
-          (col("__ub") === col("__ua") && col("__tb") > col("__ta"))))
-      .select("ra", "rb")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val grouped = candidateLists(matches)
+    val lists = grouped.rdd
+    val stats = lists.sparkContext.broadcast(refStats(lists, "associationFilter"))
+    val edges = lists.flatMap { q =>
+      val refs = q.getSeq[Row](1).map(_.getString(0))
+      for (a <- refs; b <- refs if a != b) yield ((a, b), 1L)
+    }.reduceByKey(_ + _).filter { case ((a, b), co) =>
+      val ((ua, ta), (ub, tb)) = (stats.value(a), stats.value(b))
+      co.toDouble / ta >= shareCo && (ub > ua || (ub == ua && tb > ta))
+    }.collect()
+    stats.destroy()
+    val explained = edges.groupBy(_._1._1).map { case (a, es) =>
+      a -> es.minBy { case ((_, b), co) => (-co, b) }._1._2 }
     // chase chains to a fixpoint (cpp:385-399), cycle-guarded
-    def resolve(r: String): String = {
-      var cur = r
-      val seen = scala.collection.mutable.Set(cur)
-      while (explained.contains(cur) && !seen.contains(explained(cur))) {
-        cur = explained(cur); seen += cur
-      }
-      cur
+    def resolve(r: String, seen: Set[String]): String = explained.get(r) match {
+      case Some(b) if !seen(b) => resolve(b, seen + b)
+      case _ => r
     }
-    val remap = explained.keys.map(r => r -> resolve(r)).filter(p => p._1 != p._2)
-    if (remap.isEmpty) { withN.unpersist(); return matches }
-    import spark.implicits._
-    val remapDf = remap.toSeq.toDF("ref", "__new_ref")
-    val queryRefs = matches.groupBy("query_id")
-      .agg(collect_set(col("ref")).as("__refs"))
-    val out = matches
-      .join(broadcast(remapDf), Seq("ref"), "left")
-      .join(queryRefs, "query_id")
-      .withColumn("__target", coalesce(col("__new_ref"), col("ref")))
+    val remap = explained.keys.map(r => r -> resolve(r, Set(r))).filter(p => p._1 != p._2)
+    if (remap.isEmpty) return matches
+    matches.sparkSession.createDataFrame(lists, grouped.schema)
+      .select(col("query_id"), col("c.ref").as("__refs"), explode(col("c")).as("m"))
+      .withColumn("__new", typedLit(remap.toMap).getItem(col("m.ref")))
       // drop the remapped row when the query already maps to the target
-      .where(col("__new_ref").isNull ||
-        !array_contains(col("__refs"), col("__new_ref")))
-      .groupBy(col("query_id"), col("__target").as("ref"))
-      .agg(max(col("match_cnt")).as("match_cnt"), max(col("query_n")).as("query_n"))
-    withN.unpersist()
-    out
+      .where(col("__new").isNull || !array_contains(col("__refs"), col("__new")))
+      .groupBy(col("query_id"), coalesce(col("__new"), col("m.ref")).as("ref"))
+      .agg(max(col("m.match_cnt")).as("match_cnt"),
+        max(col("m.query_n")).as("query_n"))
   }
 
   /** C1 — EM reassignment, reference-faithful
@@ -116,14 +102,19 @@ object ProfilePipeline {
     * after maxIters; erase-worst also forces termination after
     * max-candidates-per-query iterations.
     *
-    * Scale shape: per-iteration driver state is O(|refs|) doubles broadcast
-    * back as a tiny map; the E-step is ONE hash aggregation per iteration
-    * (map-side partial, no window sort) producing, per query, both the best
-    * and worst candidate from the same min/max of a (−post, ref) struct —
-    * deterministic ties (best: ref asc, worst: ref desc, so a fully tied
-    * pair never erases its own best). The erase step re-filters the cached
-    * candidate table against the per-query aggregate (both sides already
-    * hash-partitioned by query_id).
+    * Scale shape: the matches are grouped once into persisted per-query
+    * candidate arrays (ref index over the refs sorted in Spark's binary
+    * string order, log lik, query_n). Each iteration is then ONE job with
+    * no shuffle: the E-step ranks every query's candidates under the
+    * driver's O(|refs|) log priors, and per-partition weight arrays are
+    * reduced to the driver; erase-worst is a narrow map to the next
+    * persisted state. The rank is Spark's order on the struct (−post, ref,
+    * query_n), with the logs taken by `StrictMath.log` as Spark's `log`
+    * does: best = min (ref asc on a tie), worst = max (ref desc), so a fully
+    * tied pair never erases its own best. Every state is released before
+    * the return; the result keeps the full lineage back to the one grouping
+    * shuffle. Throws IllegalArgumentException on a null query_id, ref,
+    * match_cnt or query_n.
     *
     * @return (query_id, ref, weight) final hard assignment.
     */
@@ -131,111 +122,120 @@ object ProfilePipeline {
       matches: DataFrame,
       maxIters: Int = 100,
       tol: Double = math.abs(math.log(1e-4))): DataFrame = {
-    val spark = matches.sparkSession
-    import spark.implicits._
-    val lik0raw = matches
-      .withColumn("lik", col("match_cnt") / col("query_n"))
-      .select("query_id", "ref", "lik", "query_n")
-      .cache()
-    val refs = lik0raw.select("ref").distinct().as[String].collect()
-    if (refs.isEmpty) { // empty input: empty assignment, not a div-by-zero
-      lik0raw.unpersist()
-      return lik0raw.select(col("query_id"), col("ref"),
-        lit(0.0).as("weight")).limit(0)
-    }
-    // maxIters <= 0 degrades to one E-step under uniform priors (the
-    // pre-erase-worst behaviour for that input), never a null assignment
-    val iterCap = math.max(1, maxIters)
-    // MULTI-iteration runs flatten and right-size the loop input (one
-    // E-step pays neither): localCheckpoint (eager), not cache — every
-    // iteration's plan would otherwise embed the whole upstream candidate
-    // lineage plus one join layer PER ITERATION (guide §5: lineage
-    // truncation for iterative intermediates whose fault tolerance is not
-    // critical; a lost block fails the job instead of recomputing — the
-    // documented trade for an EM loop that simply reruns). The loop also
-    // derives its partition count from the candidate row count (guide §2
-    // scale-adaptive partitioning): a count inherited from the scan or
-    // the session pays per-iteration scheduling for mostly-empty tasks at
-    // small scale, while huge inputs still cap at the cluster
-    // parallelism. The repartition is keyed on query_id and the
-    // checkpoint PRESERVES the partitioning, so the per-iteration
-    // groupBy(query_id) and the erase-step join need no further exchange.
-    val lik0 =
-      if (iterCap == 1) lik0raw
-      else {
-        val n = lik0raw.count()
-        val p = math.max(1L, math.min(
-          spark.sparkContext.defaultParallelism.toLong,
-          n / 2000000L + 1L)).toInt
-        val flat = lik0raw.repartition(p, col("query_id")).localCheckpoint()
-        lik0raw.unpersist()
-        flat
+    val lists = candidateLists(matches,
+      (col("match_cnt") / col("query_n")).cast("double"),
+      col("query_n").cast("double")).rdd
+    val outSchema = StructType(Seq(matches.schema("query_id"),
+      StructField("ref", StringType), StructField("weight", DoubleType)))
+    val refs = refStats(lists, "emAssign").keys.toArray.sortWith((a, b) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0)
+    if (refs.isEmpty) return matches.sparkSession
+      .createDataFrame(java.util.List.of[Row](), outSchema)
+    val index = refs.zipWithIndex.toMap
+    var cur = lists.map { q =>
+      val c = q.getSeq[Row](1)
+      Cands(q.get(0), c.map(m => index(m.getString(0))).toArray,
+        c.map(m => StrictMath.log(m.getDouble(3) + 1e-12)).toArray,
+        c.map(_.getDouble(4)).toArray)
+    }.persist()
+    var prev = cur // released once its successor is materialized
+    val iterCap = math.max(1, maxIters) // <= 0: one E-step, uniform priors
+    var lp = Array.fill(refs.length)(StrictMath.log(1.0 / refs.length + 1e-12))
+    var (lastLl, iter, done) = (Double.NegativeInfinity, 0, false)
+    try {
+      while (!done) {
+        val lpI = lp
+        // reduced as the partitions finish: O(|refs|) on the driver
+        val (w, ll) = cur.mapPartitions { it =>
+          val w = new Array[Double](lpI.length)
+          var ll = 0.0
+          for (c <- it; (b, _, ps) = rank(c, lpI)) {
+            w(c.ref(b)) += c.qn(b); ll += ps
+          }
+          Iterator((w, ll))
+        }.reduce((a, b) =>
+          (a._1.indices.map(i => a._1(i) + b._1(i)).toArray, a._2 + b._2))
+        if (prev ne cur) prev.unpersist()
+        prev = cur
+        done = ll - lastLl < tol || iter + 1 >= iterCap
+        lastLl = ll
+        if (!done) {
+          val total = w.sum
+          lp = w.map(x => StrictMath.log(x / total + 1e-12))
+          cur = cur.map { c =>
+            if (c.ref.length == 1) c
+            else {
+              val worst = c.ref(rank(c, lpI)._2)
+              val keep = c.ref.indices.filter(c.ref(_) != worst).toArray
+              Cands(c.qid, keep.map(c.ref), keep.map(c.ll), keep.map(c.qn))
+            }
+          }.persist()
+        }
+        iter += 1
       }
-    var priors = refs.map(_ -> 1.0 / refs.length).toMap
-    var lastLl = Double.NegativeInfinity
-    var iter = 0
-    var done = false
-    var cur = lik0
-    var prevCur: DataFrame = null // unpersisted once its successor is live
-    var lastG: DataFrame = null
-    // best/worst from one struct: min = (max post, ref asc); max = (min
-    // post, ref desc) — a fully tied pair never erases its own best
-    val key = struct(negate(col("post")).as("np"), col("ref").as("r"),
-      col("query_n").as("qn"))
-    while (iter < iterCap && !done) {
-      val priorDf = broadcast(priors.toSeq.toDF("ref", "prior"))
-      val scored = cur.join(priorDf, "ref")
-        .withColumn("post",
-          log(col("lik") + 1e-12) + log(col("prior") + 1e-12))
-      val g = scored.groupBy("query_id")
-        .agg(min(key).as("best"), max(key).as("worst"),
-          count(lit(1)).as("n_cand"), sum("post").as("psum"))
-        .cache()
-      // one collect per iteration: per-ref assigned weight + post sums;
-      // ll is the reference's sum of posts over ALL remaining candidates.
-      // This action also populates g's (and cur's) cache.
-      val stats = g.groupBy(col("best.r").as("ref"))
-        .agg(sum(col("best.qn").cast("double")).as("wsum"),
-          sum("psum").as("ps"))
-        .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2))))
-        .toMap
-      // cur's cache is now populated → its predecessor can go
-      if (prevCur != null && (prevCur ne lik0)) prevCur.unpersist()
-      val ll = stats.values.map(_._2).sum
-      val total = stats.values.map(_._1).sum
-      done = ll - lastLl < tol || iter + 1 >= iterCap
-      lastLl = ll
-      if (lastG != null) lastG.unpersist()
-      lastG = g
-      if (!done) {
-        priors = refs.map(r =>
-          r -> (stats.get(r).map(_._1).getOrElse(0.0) / total)).toMap
-        // erase each multi-candidate query's worst match; both sides are
-        // hash-partitioned by query_id after the aggregation, so this is a
-        // co-partitioned join, not a fresh full shuffle of the candidates
-        val next = scored
-          .join(g.select(col("query_id"), col("worst.r").as("__wref"),
-            col("n_cand")), "query_id")
-          .where(col("n_cand") === 1 || col("ref") =!= col("__wref"))
-          .select("query_id", "ref", "lik", "query_n")
-          .localCheckpoint() // flat plan for the next iteration (see lik0)
-        prevCur = cur // still needed until next's cache is populated
-        cur = next
-      }
-      iter += 1
+      val lpF = lp
+      matches.sparkSession.createDataFrame(cur.map { c =>
+        val b = rank(c, lpF)._1
+        Row(c.qid, refs(c.ref(b)), c.qn(b))
+      }, outSchema)
+    } finally { prev.unpersist(); cur.unpersist() }
+  }
+
+  /** One query's EM candidates: ref index, log lik and query_n per match. */
+  private case class Cands(qid: Any, ref: Array[Int], ll: Array[Double],
+      qn: Array[Double])
+
+  /** Positions of the best (min) and worst (max) candidate in Spark's order
+    * on the struct (−post, ref, query_n), post = log lik + log prior; and
+    * the sum of the posts. */
+  private def rank(c: Cands, lp: Array[Double]): (Int, Int, Double) = {
+    val post = c.ref.indices.map(i => c.ll(i) + lp(c.ref(i)))
+    def lt(i: Int, j: Int): Boolean = {
+      val d = compareDoubles(-post(i), -post(j))
+      if (d != 0) d < 0
+      else if (c.ref(i) != c.ref(j)) c.ref(i) < c.ref(j)
+      else compareDoubles(c.qn(i), c.qn(j)) < 0
     }
-    // final assignment = last iteration's E-step; lastG stays cached. In
-    // the checkpointed (multi-iteration) case the final `cur` checkpoint
-    // must stay alive too: lastG's recompute path ends at that truncated
-    // plan, so dropping its blocks would turn a cache eviction into a
-    // failure (ContextCleaner reclaims both once the caller releases the
-    // returned plan). In the one-E-step case lik0 is a plain cache with
-    // full lineage — release it as before.
-    if (prevCur != null && (prevCur ne lik0)) prevCur.unpersist()
-    if (cur ne lik0) lik0.unpersist()
-    else if (lik0 eq lik0raw) lik0raw.unpersist()
-    lastG.select(col("query_id"), col("best.r").as("ref"),
-      col("best.qn").cast("double").as("weight"))
+    var (best, worst) = (0, 0)
+    for (i <- 1 until c.ref.length) {
+      if (lt(i, best)) best = i
+      if (lt(worst, i)) worst = i
+    }
+    (best, worst, post.sum)
+  }
+
+  private val Checked = Seq("query_id", "ref", "match_cnt", "query_n")
+
+  /** One row per query_id: (query_id, c: array<struct<ref, match_cnt,
+    * query_n, extra…>>). Jobs over its `rdd` share the one shuffle. */
+  private def candidateLists(matches: DataFrame, extra: Column*): DataFrame =
+    matches.groupBy("query_id").agg(collect_list(
+      struct(Checked.tail.map(col) ++ extra: _*)).as("c"))
+
+  /** One job over the candidate lists: per ref, (rows of single-candidate
+    * queries, all rows). Fails on the driver, naming the column, when a
+    * query_id, ref, match_cnt or query_n is null. */
+  private def refStats(lists: RDD[Row], fn: String): Map[String, (Long, Long)] = {
+    val parts = lists.mapPartitions { it =>
+      val nulls = new Array[Long](Checked.length)
+      val st = scala.collection.mutable.HashMap[String, (Long, Long)]()
+      for (q <- it) {
+        if (q.isNullAt(0)) nulls(0) += 1
+        val c = q.getSeq[Row](1)
+        for (m <- c) {
+          for (i <- 1 until Checked.length if m.isNullAt(i - 1)) nulls(i) += 1
+          val (u, t) = st.getOrElse(m.getString(0), (0L, 0L))
+          st(m.getString(0)) = (u + (if (c.size == 1) 1 else 0), t + 1)
+        }
+      }
+      Iterator((nulls, st.toMap))
+    }.collect()
+    for ((c, i) <- Checked.zipWithIndex) {
+      val n = parts.map(_._1(i)).sum
+      require(n == 0, s"$fn: column $c holds $n null value(s)")
+    }
+    parts.flatMap(_._2).groupMapReduce(_._1)(_._2)((a, b) =>
+      (a._1 + b._1, a._2 + b._2))
   }
 
   /** A10 — relative abundance per ref from assigned weight (nucleotide-style:

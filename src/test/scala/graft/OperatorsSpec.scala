@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -575,6 +576,58 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(got("q3") == "B", s"erase-worst must keep q3 on B: $got")
     assert(got("q1") == "A" && got("q2") == "A")
   }
+
+  test("association filter: container is the top co-mapped ref, any partitioning") {
+    // A is explained by B (co 2) and by C (co 3): C wins and A's lone q4
+    // folds into C. D is explained by E and F with equal co: E, the lower
+    // ref, wins, so D's lone p3 folds into E.
+    val m = (Seq("q1" -> "A", "q1" -> "B", "q1" -> "C", "q2" -> "A",
+      "q2" -> "B", "q2" -> "C", "q3" -> "A", "q3" -> "C", "q4" -> "A",
+      "p1" -> "D", "p1" -> "E", "p1" -> "F", "p2" -> "D", "p2" -> "E",
+      "p2" -> "F", "p3" -> "D") ++
+      (1 to 5).map(i => s"b$i" -> "B") ++ (1 to 3).map(i => s"c$i" -> "C") ++
+      (1 to 3).map(i => s"e$i" -> "E") ++ (1 to 3).map(i => s"f$i" -> "F"))
+      .toDF("query_id", "ref").withColumn("match_cnt", lit(5L))
+      .withColumn("query_n", lit(10L))
+    val got = Seq(1, 7).map(n => withShufflePartitions(n) {
+      ProfilePipeline.associationFilter(m, shareCo = 0.5)
+        .select("query_id", "ref").as[(String, String)].collect().toSet
+    })
+    assert(got(0) == got(1), s"partitioning changed the pick: $got")
+    assert(got(0).contains(("q4", "C")) && got(0).contains(("p3", "E")),
+      s"${got(0)}")
+    assert(!got(0).exists(p => p._2 == "A" || p._2 == "D"))
+  }
+
+  test("profile functions on an empty input return their empty schema") {
+    val m = Seq.empty[(Long, String, Long, Int)]
+      .toDF("query_id", "ref", "match_cnt", "query_n")
+    for (out <- Seq(ProfilePipeline.uniqueMappingFilter(m),
+        ProfilePipeline.lowConfidenceFilter(m),
+        ProfilePipeline.associationFilter(m))) {
+      assert(out.schema == m.schema && out.isEmpty)
+    }
+    val em = ProfilePipeline.emAssign(m, maxIters = 20)
+    assert(em.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("query_id" -> "bigint", "ref" -> "string", "weight" -> "double"))
+    assert(em.isEmpty)
+  }
+
+  private def nullIn(column: String) = Seq(
+    ("q1", Option("A"), Option(5L), Option(10L)),
+    ("q2", if (column == "ref") None else Some("B"),
+      if (column == "match_cnt") None else Some(5L),
+      if (column == "query_n") None else Some(10L)))
+    .toDF("query_id", "ref", "match_cnt", "query_n")
+
+  for (c <- Seq("ref", "match_cnt", "query_n"))
+    test(s"association filter and EM reject a null $c on the driver") {
+      for (f <- Seq((m: DataFrame) => ProfilePipeline.associationFilter(m),
+          (m: DataFrame) => ProfilePipeline.emAssign(m))) {
+        val e = intercept[IllegalArgumentException](f(nullIn(c)))
+        assert(e.getMessage.contains(s"column $c "), e.getMessage)
+      }
+    }
 
   test("hot-shingle df cap drops stopword-only pairs, keeps true dups") {
     // every doc shares one planted hot 8-gram block; only 0/1 are real dups

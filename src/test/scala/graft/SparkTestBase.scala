@@ -23,4 +23,14 @@ object SparkTestBase {
 
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Runs `body` with `n` shuffle partitions and AQE coalescing off, so the
+    * partition count really is `n`; restores both settings after. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val old = keys.map(spark.conf.get)
+    spark.conf.set(keys(0), n.toString); spark.conf.set(keys(1), "false")
+    try body finally keys.zip(old).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }
