@@ -91,7 +91,11 @@ object TextOps {
       while (tail > head && hs(dq(tail - 1)) >= hs(i)) tail -= 1
       dq(tail) = i; tail += 1
       if (dq(head) <= i - w) head += 1
-      if (i >= w - 1) { out(cnt) = hs(dq(head)); cnt += 1 }
+      // consecutive windows mostly share their minimum: keep a run once,
+      // so the sort sees ~(w+1)/2 times fewer values (same distinct set)
+      if (i >= w - 1 && (cnt == 0 || out(cnt - 1) != hs(dq(head)))) {
+        out(cnt) = hs(dq(head)); cnt += 1
+      }
       i += 1
     }
     new GenericArrayData(sortedDistinct(out, cnt))

@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   * Builds, per role: HLL of conv_id (p=14), Bloom over text shingles
   * (fpp=0.0039 XOR-parity), CMS of tool (eps=1e-4), KLL + t-digest of
   * text length — all as per-chunk partials with commit records, then an
-  * associative final merge (resume-safe; see SketchCheckpoint).
+  * associative final merge (resume-safe; see SketchCheckpoint). Chunks
+  * build side by side, up to one per core, so the `wall_ms` and
+  * `rows_per_sec` of a commit record time a chunk that shares the cores,
+  * and a kill loses at most the chunks in flight.
   */
 object BuildTranscriptSketches {
   val HllP = 14

@@ -19,13 +19,25 @@ object Dedup {
     * driver calls them sequentially). First failure is rethrown after all
     * threads finish. Used for independent table WRITES within one index
     * mutation — each task must touch a distinct output directory. */
-  private[graft] def runParallel(tasks: (() => Unit)*): Unit = {
+  private[graft] def runParallel(tasks: (() => Unit)*): Unit =
+    runParallel(tasks.size, tasks)
+
+  /** As above, with at most `maxInFlight` tasks running at a time; a task
+    * that has not started when one fails never starts. Threads are created
+    * here, per task, so they inherit the caller's Spark local properties
+    * (job group, description). */
+  private[graft] def runParallel(
+      maxInFlight: Int, tasks: Seq[() => Unit]): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = tasks.map { t =>
-      val th = new Thread(() =>
-        try t() catch { case e: Throwable => errs.add(e) })
-      th.start(); th
-    }
+    val slots = new java.util.concurrent.Semaphore(math.max(1, maxInFlight))
+    val threads = tasks.iterator
+      .takeWhile { _ => slots.acquire(); errs.isEmpty }
+      .map { t =>
+        val th = new Thread(() =>
+          try t() catch { case e: Throwable => errs.add(e) }
+          finally slots.release())
+        th.start(); th
+      }.toList
     threads.foreach(_.join())
     if (!errs.isEmpty) throw errs.peek()
   }

@@ -263,23 +263,25 @@ object Similarity {
           when(!col("__bad"),
             element_at(nearest_centroids(col("vec"), centsLit, 1), 1)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val stats = flagged
-        .select(col("__bad"), when(!col("__bad"),
-          cosine(col("vec"), element_at(centsLit, col("cid") + 1))).as("sim"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("__bad"), 1L).otherwise(0L)).as("bad"),
-          sum(when(!col("__bad") && col("sim") < driftSimFloor, 1L)
-            .otherwise(0L)).as("low"))
-        .first()
-      require(stats.getLong(1) == 0L,
-        s"IVF append at $dir: null vectors or dims disagreeing with the " +
-          s"index ($dims) — appending them would corrupt cell assignment")
-      val drift =
+      val drift = try {
+        // coalesce: sum over an empty batch is NULL
+        val stats = flagged
+          .select(col("__bad"), when(!col("__bad"),
+            cosine(col("vec"), element_at(centsLit, col("cid") + 1))).as("sim"))
+          .agg(count(lit(1)).as("n"),
+            coalesce(sum(when(col("__bad"), 1L).otherwise(0L)), lit(0L))
+              .as("bad"),
+            coalesce(sum(when(!col("__bad") && col("sim") < driftSimFloor, 1L)
+              .otherwise(0L)), lit(0L)).as("low"))
+          .first()
+        require(stats.getLong(1) == 0L,
+          s"IVF append at $dir: null vectors or dims disagreeing with the " +
+            s"index ($dims) — appending them would corrupt cell assignment")
+        flagged.drop("__bad")
+          .write.mode("append").partitionBy("cid").parquet(s"$dir/data")
         if (stats.getLong(0) == 0L) 0.0
         else stats.getLong(2).toDouble / stats.getLong(0)
-      flagged.drop("__bad")
-        .write.mode("append").partitionBy("cid").parquet(s"$dir/data")
-      flagged.unpersist()
+      } finally flagged.unpersist()
       graft.sources.SketchTable.saveManifestOnly(spark, dir,
         p ++ Map(
           "appends" -> (p.getOrElse("appends", "0").toLong + 1).toString,

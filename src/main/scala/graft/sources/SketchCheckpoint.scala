@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.Dedup
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 
@@ -11,7 +12,9 @@ import java.nio.charset.StandardCharsets
   * are written under `workDir/partials/chunk=<id>/` and sealed with an
   * atomically-renamed commit record `workDir/_commits/<id>.json` carrying
   * lineage (input files, row count) and sketch-update metrics (rows/sec,
-  * wall ms). A killed job re-plans only uncommitted chunks; the final merge
+  * wall ms — chunks run side by side, so these time a chunk while it
+  * shares the cores). A kill loses at most the chunks in flight; a rerun
+  * re-plans only uncommitted chunks; the final merge
   * reads committed partials and re-merges. For the order-insensitive
   * sketches (HLL/Bloom/CMS — commutative idempotent merges) the resumed
   * result is byte-identical to a single-shot run (proven in CheckpointSpec);
@@ -26,8 +29,6 @@ import java.nio.charset.StandardCharsets
   * SURVEY.md §7.4 keeps this behind a seam).
   */
 object SketchCheckpoint {
-  case class ChunkResult(id: Int, files: Seq[String], rows: Long, wallMs: Long)
-
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -67,6 +68,16 @@ object SketchCheckpoint {
     * sketch table. `partialAggs` run per chunk over `groupBy(keys)`;
     * `mergeAggs` re-aggregate the written partial columns by the same keys.
     *
+    * Uncommitted chunks run concurrently, at most `defaultParallelism` at a
+    * time (more cannot add running tasks); each writes its own partial dir
+    * and then its own commit record, in any order, and the merge starts
+    * after all of them. The first failure is rethrown once the chunks in
+    * flight finish; no further chunk starts. Every input file is read with
+    * the schema of the first file's footer, the partials with the partial
+    * plan's schema, so no read runs a schema-inference job; a chunk's row
+    * count is observed on its partial write. A build of k fresh chunks runs
+    * 2k + 3 Spark jobs, a full resume 3.
+    *
     * @return the final merged sketch DataFrame (also written to
     *         `workDir/final`), after writing `workDir/manifest.json`.
     */
@@ -79,8 +90,9 @@ object SketchCheckpoint {
       mergeAggs: Seq[Column],
       filesPerChunk: Int = 1): DataFrame = {
     val f = fs(spark, workDir)
-    f.mkdirs(new Path(s"$workDir/_commits"))
     val chunks = planChunks(spark, inputDir, filesPerChunk)
+    require(chunks.nonEmpty, s"checkpoint input $inputDir has no parquet files")
+    f.mkdirs(new Path(s"$workDir/_commits"))
     // pin the chunking plan: resuming with a different filesPerChunk or a
     // changed input file list would otherwise silently double-merge stale
     // partials covering the same rows
@@ -98,19 +110,21 @@ object SketchCheckpoint {
           s"or input set): $prev vs $planJson — clean $workDir to rebuild")
     } else writeAtomic(f, planPath, planJson)
     val done = committedChunks(spark, workDir)
-    val results = chunks.zipWithIndex.map { case (files, id) =>
-      if (done.contains(id)) None
-      else {
+    val inSchema = spark.read.parquet(chunks.head.head).schema
+    def partial(files: Seq[String]): DataFrame =
+      spark.read.schema(inSchema).parquet(files: _*)
+        .groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__rows"), partialAggs: _*)
+    val fresh = chunks.zipWithIndex.filterNot { case (_, id) => done(id) }
+    val freshRows = new java.util.concurrent.atomic.AtomicLong()
+    Dedup.runParallel(spark.sparkContext.defaultParallelism,
+      fresh.map[() => Unit] { case (files, id) => () =>
         val t0 = System.nanoTime()
-        val partial = spark.read.parquet(files: _*)
-          .groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__rows"), partialAggs: _*)
-        partial.write.mode("overwrite").parquet(s"$workDir/partials/chunk=$id")
-        // row count comes from the written partials — no second input scan
-        // (coalesce: a chunk of empty part files aggregates to zero groups)
-        val rowsRow = spark.read.parquet(s"$workDir/partials/chunk=$id")
-          .agg(coalesce(sum("__rows"), lit(0L))).first()
-        val rows = rowsRow.getLong(0)
+        // coalesce: a chunk of empty part files aggregates to zero groups
+        val obs = new Observation()
+        partial(files).observe(obs, coalesce(sum("__rows"), lit(0L)).as("rows"))
+          .write.mode("overwrite").parquet(s"$workDir/partials/chunk=$id")
+        val rows = obs.get("rows").asInstanceOf[Long]
         val wallMs = (System.nanoTime() - t0) / 1000000
         val commit =
           s"""{"chunk":$id,"files":[${files.map(x => "\"" + x + "\"").mkString(",")}],
@@ -118,15 +132,14 @@ object SketchCheckpoint {
              |"rows_per_sec":${if (wallMs > 0) rows * 1000 / wallMs else rows}}"""
             .stripMargin.replace("\n", "")
         writeAtomic(f, new Path(s"$workDir/_commits/$id.json"), commit)
-        Some(ChunkResult(id, files, rows, wallMs))
-      }
-    }
-    val fresh = results.flatten
+        freshRows.addAndGet(rows)
+    })
     // merge ONLY the chunks of this plan (explicit paths, not directory
     // discovery — stale dirs from an aborted differently-chunked run can
     // never leak into the merge)
     val chunkPaths = chunks.indices.map(id => s"$workDir/partials/chunk=$id")
-    val merged = spark.read.parquet(chunkPaths: _*)
+    val merged = spark.read.schema(partial(chunks.head).schema)
+      .parquet(chunkPaths: _*)
       .groupBy(keys.map(col): _*)
       .agg(mergeAggs.head,
         (mergeAggs.tail :+ sum(col("__rows")).as("rows_seen")): _*)
@@ -134,10 +147,10 @@ object SketchCheckpoint {
     val manifest =
       s"""{"input":"$inputDir","chunks":${chunks.length},
          |"resumed_chunks":${done.size},"fresh_chunks":${fresh.length},
-         |"fresh_rows":${fresh.map(_.rows).sum},
+         |"fresh_rows":${freshRows.get},
          |"keys":[${keys.map(k => "\"" + k + "\"").mkString(",")}]}"""
         .stripMargin.replace("\n", "")
     writeAtomic(f, new Path(s"$workDir/manifest.json"), manifest)
-    spark.read.parquet(s"$workDir/final")
+    spark.read.schema(merged.schema).parquet(s"$workDir/final")
   }
 }

@@ -235,6 +235,30 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(again == fromIndex)
   }
 
+  test("ivf append of an empty batch leaves the index's probes unchanged") {
+    val corpus = vecs.toDF("id", "vec")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-empty").toString
+    Similarity.IvfIndex.build(corpus, dir, nCentroids = 8)
+    val qs = corpus.limit(8)
+      .select(col("id").as("qid"), col("vec").as("qvec"))
+    def probe() = Similarity.IvfIndex.topK(spark, dir, qs, 3, nProbe = 3)
+      .select("qid", "rank", "id").as[(Long, Int, Long)].collect().toSet
+    val before = probe()
+    assert(Similarity.IvfIndex.append(corpus.limit(0), dir) == 0.0)
+    assert(probe() == before)
+  }
+
+  test("ivf append releases its persisted batch when the dims guard fires") {
+    val corpus = vecs.toDF("id", "vec")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-guard").toString
+    Similarity.IvfIndex.build(corpus, dir, nCentroids = 8)
+    spark.catalog.clearCache()
+    val bad = Seq((999L, Array.fill(8)(0.5f))).toDF("id", "vec")
+    intercept[IllegalArgumentException](Similarity.IvfIndex.append(bad, dir))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failed append left its flagged batch persisted")
+  }
+
   test("cosine near-dup pairs via srp lsh") {
     val got = Similarity.cosineNearDupPairs(vecs, threshold = 0.999,
         tables = 16, bits = 6)

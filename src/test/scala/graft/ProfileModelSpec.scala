@@ -1,8 +1,6 @@
 package graft
 
 import graft.operators.ProfilePipeline
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -84,18 +82,8 @@ class ProfileModelSpec extends AnyFunSuite with SparkTestBase {
     val (_, k) = Model.em(m, 20)
     assert(k >= 3, s"fixture should take several rounds, took $k")
     val df = frame(m, longIds = true)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    TestListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      ProfilePipeline.emAssign(df, maxIters = 20).collect()
-      TestListenerBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= k + 3, s"${jobs.get()} jobs for $k rounds")
+    val jobs = countJobs(ProfilePipeline.emAssign(df, maxIters = 20).collect())
+    assert(jobs <= k + 3, s"$jobs jobs for $k rounds")
   }
 
   test("profile functions release everything they persist") {

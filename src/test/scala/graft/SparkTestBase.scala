@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark suites (JVM-wide). */
@@ -32,5 +34,20 @@ trait SparkTestBase {
     val old = keys.map(spark.conf.get)
     spark.conf.set(keys(0), n.toString); spark.conf.set(keys(1), "false")
     try body finally keys.zip(old).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** Number of Spark jobs `body` submits (the listener bus is drained
+    * before and after, so jobs of earlier code are not counted). */
+  def countJobs(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; TestListenerBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
   }
 }
